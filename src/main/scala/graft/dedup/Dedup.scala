@@ -2344,42 +2344,18 @@ object Dedup {
     */
   def incrementalDedup(inc: DataFrame, idCol: String, textCol: String,
       baseExact: DataFrame, baseBands: DataFrame,
-      maxHamming: Int): DataFrame =
-    incrementalDedupImpl(inc, idCol, textCol, baseExact, baseBands,
-      maxHamming,
-      windowMin = !inc.isStreaming &&
-        graft.ScanBytes.of(inc) >= (1L << 24))
-
-  /** [[incrementalDedup]] with the within-increment-minimum arm
-    * switchable, so the equivalence spec can drive both on one frame.
-    */
-  private[graft] def incrementalDedupImpl(inc: DataFrame, idCol: String,
-      textCol: String, baseExact: DataFrame, baseBands: DataFrame,
-      maxHamming: Int, windowMin: Boolean): DataFrame = {
+      maxHamming: Int): DataFrame = {
     val incFp = inc
       .select(col(idCol), col(textCol),
         md5(coalesce(col(textCol), lit(""))).as("fp"))
-    // within-increment exact minimum as a WINDOW over the fp exchange
-    // (r18, guide §2.4): the former separate `groupBy(fp).min` +
-    // join-back subtree re-scanned the increment and re-ran the md5
-    // fingerprint a second time per cache build (the r17 d11 plan's
-    // duplicated increment scans); the window reads its single child
-    // once, and its fp-clustering is exactly what the index join keys
-    // on anyway. GATED on the increment's actual scan bytes (the
-    // pairGuard floor): below it the duplicate scan+md5 runs as a
-    // parallel broadcast-future off the critical path and the window's
-    // serial exchange+sort measurably LOSES (refbench r18: d11 ~+0.5 s
-    // paired at sf0.1), above it a second full md5 pass over the
-    // increment is the cost that matters. Both arms are row-identical
-    // (window min == groupBy min joined back on the key; DedupSpec).
-    val incMin =
-      if (windowMin)
-        incFp.withColumn("inc_min",
-          min(col(idCol)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))))
-      else
-        incFp.join(incFp.groupBy(col("fp"))
-          .agg(min(col(idCol)).as("inc_min")), Seq("fp"))
+    // within-increment exact minimum: `groupBy(fp).min` joined back on
+    // the key. Its duplicate scan + md5 runs as a parallel
+    // broadcast-future off the critical path; a row-identical
+    // window-min over the fp exchange lost at oracle scales (serial
+    // exchange + sort) and was never observed winning above its 16 MB
+    // gate (OPTIMIZATION_r18.md item 4, VERDICT.md #3).
+    val incMin = incFp.join(incFp.groupBy(col("fp"))
+      .agg(min(col(idCol)).as("inc_min")), Seq("fp"))
     // exact stage: one fp-keyed join against the index. Cached (the d2
     // precedent — Verify/Bench clear per query, pipelines own
     // clearCache): `tagged` feeds the survivor filter AND the final

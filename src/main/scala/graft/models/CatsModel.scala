@@ -26,8 +26,7 @@ import graft.models.Hdf5Reader.Tensor
   * at the ~1e-6 level (pinned against an independent NumPy evaluation of
   * the same archive in CatsModelSpec).
   */
-final class CatsModel(w: Map[String, Tensor],
-    kern: CatsKernel = CatsKernel.default) extends Serializable {
+final class CatsModel(w: Map[String, Tensor]) extends Serializable {
   import CatsModel._
 
   private def mat(name: String): Array[Array[Float]] = w(name).matrix
@@ -41,7 +40,7 @@ final class CatsModel(w: Map[String, Tensor],
       vec(s"/layers/$base/vars/1").map(_.toDouble))
   }
   // the conv taps as per-tap weight-row matrices [dt][in][outC], the
-  // shape CatsKernel.gemmAcc consumes in the batched forward
+  // shape `gemmAcc` consumes in the batched forward
   private val convTapRows = convs.map { case (in, outC, kdata, _) =>
     Array.tabulate(2)(dt => Array.tabulate(in)(j =>
       java.util.Arrays.copyOfRange(kdata, (dt * in + j) * outC,
@@ -181,17 +180,14 @@ final class CatsModel(w: Map[String, Tensor],
     * tiles), matching the reference's Arrow-batch scoring granularity
     * (rubin/cats/processor.py:60-169).
     *
-    * Measured honestly (tools/CatsProfile, local box): the per-row
-    * pass runs at ~4-5 GMAC/s, which is ALREADY the JVM's measured
-    * single-stream axpy ceiling for L2-resident weights (an isolated
-    * `g(k) += x*w(k)` microbench tops out at 5.3 GMAC/s from L2,
-    * 9.6 GMAC/s from L1 — tools/AxpyBench), so weight-reuse tiling
-    * buys ~1.15x here, not TF's order-of-magnitude batch win; without
-    * explicit SIMD (jdk.incubator.vector) or float32 (which would
-    * break the 1e-9 golden pins) the scalar/superword ceiling is the
-    * binding constraint. The batch entry point is still the right
-    * plumbing: it amortizes per-call overhead, and a future vectorized
-    * kernel slots in behind the same API.
+    * Measured (SCALE_r06.md): the per-row pass runs at ~4-5 GMAC/s,
+    * which is ALREADY the JVM's single-stream axpy ceiling for
+    * L2-resident weights (5.3 GMAC/s from L2, 9.6 GMAC/s from L1), so
+    * weight-reuse tiling buys ~1.15x here, not TF's order-of-magnitude
+    * batch win; float32 would break the 1e-9 golden pins, and an
+    * explicit-SIMD kernel measured no faster (SCALE_r09.md, see
+    * [[CatsModel.gemmAcc]]). The batch entry point still amortizes
+    * per-call overhead.
     *
     * Mixed-length inputs are grouped by length and each group runs in
     * lockstep (CATS preprocessing pads everything to one maxLen, so in
@@ -230,7 +226,7 @@ final class CatsModel(w: Map[String, Tensor],
           oRows(b) = row
           b += 1
         }
-        // both conv taps through the CatsKernel seam; per output
+        // both conv taps through `gemmAcc`; per output
         // element the add order (bias, tap 0 j-ascending, tap 1
         // j-ascending) matches the per-row forward bit-for-bit
         var dt = 0
@@ -238,7 +234,7 @@ final class CatsModel(w: Map[String, Tensor],
           if (t + dt < steps) {
             b = 0
             while (b < bN) { xRows(b) = cnn(b)(t + dt); b += 1 }
-            kern.gemmAcc(xRows, taps(dt), oRows)
+            gemmAcc(xRows, taps(dt), oRows)
           }
           dt += 1
         }
@@ -298,8 +294,8 @@ final class CatsModel(w: Map[String, Tensor],
     }
 
     // ---- RNN branch (batched lockstep) ----
-    val h1 = lstm1.sequencesBatch(a, kern)
-    val rnnOut = lstm2.lastStateBatch(h1, kern)
+    val h1 = lstm1.sequencesBatch(a)
+    val rnnOut = lstm2.lastStateBatch(h1)
 
     // ---- head + global max pool, per row ----
     Array.tabulate(bN) { b =>
@@ -341,6 +337,69 @@ object CatsModel {
   @inline private[models] def tanhFast(z: Double): Double =
     if (z >= 0) { val e = math.exp(-2.0 * z); (1.0 - e) / (1.0 + e) }
     else { val e = math.exp(2.0 * z); (e - 1.0) / (e + 1.0) }
+
+  /** The batched forward's two hot accumulations (the LSTM gate
+    * pre-activations and the conv taps): for every batch row b,
+    * `out(b)(k) += sum_j x(b)(j) * w(j)(k)` with `j` over `w.length`
+    * and `k` over `w(j).length`.
+    *
+    * CONTRACT (bit-stability): per OUTPUT ELEMENT the additions are
+    * applied j-ascending. The model's goldens are pinned at 1e-9 and
+    * the batch path is spec-pinned bit-identical to the per-row path,
+    * so the loop may tile across `b` and `k` (those reorderings leave
+    * each element's add sequence intact) but must NOT split, reorder,
+    * or pairwise-reduce the `j` accumulation; CatsModelSpec pins the
+    * raw bits against a plain j-ascending triple loop.
+    *
+    * 4-row batch tiles with the tile OUTERMOST, so each weight row
+    * streams from L2 once per 4 batch rows while the 4 output rows stay
+    * L1-resident across the j loop. C2's superword pass auto-vectorizes
+    * the k loop (~7.3 GMAC/s); an explicit Vector-API kernel measured
+    * 0.86-1.02x of this loop, and the contract forbids the fused
+    * multiply-add rewrite where the remaining SIMD headroom lives
+    * (SCALE_r09.md).
+    */
+  private[graft] def gemmAcc(x: Array[Array[Double]], w: Array[Array[Double]],
+      out: Array[Array[Double]]): Unit = {
+    val bN = x.length
+    val nJ = w.length
+    var b = 0
+    while (b + 4 <= bN) {
+      val o0 = out(b); val o1 = out(b + 1)
+      val o2 = out(b + 2); val o3 = out(b + 3)
+      val x0 = x(b); val x1 = x(b + 1)
+      val x2 = x(b + 2); val x3 = x(b + 3)
+      var j = 0
+      while (j < nJ) {
+        val wr = w(j)
+        val v0 = x0(j); val v1 = x1(j)
+        val v2 = x2(j); val v3 = x3(j)
+        var k = 0
+        val len = wr.length
+        while (k < len) {
+          val wv = wr(k)
+          o0(k) += v0 * wv; o1(k) += v1 * wv
+          o2(k) += v2 * wv; o3(k) += v3 * wv
+          k += 1
+        }
+        j += 1
+      }
+      b += 4
+    }
+    while (b < bN) { // remainder rows, single-row order
+      val o = out(b); val xr = x(b)
+      var j = 0
+      while (j < nJ) {
+        val wr = w(j)
+        val v = xr(j)
+        var k = 0
+        val len = wr.length
+        while (k < len) { o(k) += v * wr(k); k += 1 }
+        j += 1
+      }
+      b += 1
+    }
+  }
 
   /** One Keras LSTM cell: kernel (in, 4u), recurrent (u, 4u), bias (4u);
     * gate column order i, f, c-candidate, o.
@@ -406,8 +465,8 @@ object CatsModel {
       * read from L2 once per step and reused across the batch — the
       * per-row path re-streams the full weight matrices every row.
       */
-    def runBatch(x: Array[Array[Array[Double]]], reverse: Boolean,
-        kern: CatsKernel = CatsKernel.default): Array[Array[Array[Double]]] = {
+    def runBatch(x: Array[Array[Array[Double]]],
+        reverse: Boolean): Array[Array[Array[Double]]] = {
       val bN = x.length
       val n = x(0).length
       val h = Array.ofDim[Double](bN, units)
@@ -426,14 +485,12 @@ object CatsModel {
           xRows(b) = x(b)(ti)
           b += 1
         }
-        // the two hot batch GEMMs go through the CatsKernel seam (the
-        // pinned scalar default is the 4-row-tile loop measured at the
-        // JVM superword ceiling — see CatsKernel.Scalar); per gate
-        // element the accumulation order is unchanged (input j
-        // ascending, then recurrent j ascending), so results stay
-        // bit-identical to the per-row path
-        kern.gemmAcc(xRows, kernel, gates)
-        kern.gemmAcc(h, recurrent, gates)
+        // the two hot batch GEMMs (`gemmAcc`); per gate element
+        // the accumulation order is unchanged (input j ascending, then
+        // recurrent j ascending), so results stay bit-identical to the
+        // per-row path
+        gemmAcc(xRows, kernel, gates)
+        gemmAcc(h, recurrent, gates)
         b = 0
         while (b < bN) {
           val g = gates(b); val hb = h(b); val cb = c(b)
@@ -476,20 +533,19 @@ object CatsModel {
     }
 
     /** Batched [[sequences]] (lockstep; see [[LstmCell.runBatch]]). */
-    def sequencesBatch(x: Array[Array[Array[Double]]],
-        kern: CatsKernel = CatsKernel.default): Array[Array[Array[Double]]] = {
-      val f = fwd.runBatch(x, reverse = false, kern)
-      val b = bwd.runBatch(x, reverse = true, kern)
+    def sequencesBatch(
+        x: Array[Array[Array[Double]]]): Array[Array[Array[Double]]] = {
+      val f = fwd.runBatch(x, reverse = false)
+      val b = bwd.runBatch(x, reverse = true)
       val n = x(0).length
       Array.tabulate(x.length)(r =>
         Array.tabulate(n)(t => f(r)(t) ++ b(r)(n - 1 - t)))
     }
 
     /** Batched [[lastState]] (lockstep; see [[LstmCell.runBatch]]). */
-    def lastStateBatch(x: Array[Array[Array[Double]]],
-        kern: CatsKernel = CatsKernel.default): Array[Array[Double]] = {
-      val f = fwd.runBatch(x, reverse = false, kern)
-      val b = bwd.runBatch(x, reverse = true, kern)
+    def lastStateBatch(x: Array[Array[Array[Double]]]): Array[Array[Double]] = {
+      val f = fwd.runBatch(x, reverse = false)
+      val b = bwd.runBatch(x, reverse = true)
       Array.tabulate(x.length)(r => f(r).last ++ b(r).last)
     }
   }
@@ -500,11 +556,9 @@ object CatsModel {
       w(s"/layers/$base/cell/vars/2").vector)
 
   /** Load from a Keras v3 `.keras` archive (a zip holding
-    * model.weights.h5); `kern` selects the batched-GEMM kernel
-    * (default: the pinned scalar path).
+    * model.weights.h5).
     */
-  def load(kerasPath: String,
-      kern: CatsKernel = CatsKernel.default): CatsModel = {
+  def load(kerasPath: String): CatsModel = {
     val zf = new ZipFile(kerasPath)
     try {
       val entry = zf.getEntry("model.weights.h5")
@@ -512,7 +566,7 @@ object CatsModel {
       val in = zf.getInputStream(entry)
       val bytes = in.readAllBytes()
       in.close()
-      new CatsModel(Hdf5Reader.read(bytes), kern)
+      new CatsModel(Hdf5Reader.read(bytes))
     } finally zf.close()
   }
 }

@@ -16,8 +16,7 @@ object RefModels {
     * the reference checkout's bundle.
     */
   lazy val dir: String = sys.env.getOrElse("GRAFT_MODELS_DIR",
-    sys.props.getOrElse("graft.models.dir",
-      "/root/reference/fink_science/data/models"))
+    "/root/reference/fink_science/data/models")
 
   private def existing(rel: String): Option[File] = {
     val f = new File(dir, rel)

@@ -331,11 +331,13 @@ object Classifiers {
 }
 
 /** Deterministic stand-in PCA components for the kilonova projection
-  * (real deployment: the kndetect component matrix, broadcast).
+  * (real deployment: the kndetect component matrix, broadcast), in the
+  * production shape: 3 components on the 401-sample grid that
+  * [[Classifiers.kilonova]] interpolates.
   */
 object StubComponents {
   val pc: Array[Array[Double]] = {
     val r = new java.util.Random(424242L)
-    Array.fill(3)(Array.fill(24)(r.nextGaussian() / math.sqrt(24.0)))
+    Array.fill(3)(Array.fill(401)(r.nextGaussian() / math.sqrt(401.0)))
   }
 }

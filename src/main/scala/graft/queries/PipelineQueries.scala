@@ -2119,7 +2119,7 @@ object PipelineQueries extends QueryPack {
 
   private def cellAssignCtes(src: String, fixedK: String = null,
       seedSrc: String = null): String = {
-    val div = graft.sim.Similarity.cellDivisor
+    val div = graft.sim.Similarity.CellDivisor
     val gate = graft.sim.Similarity.TwoLevelGate
     // the SEED frame decides the cell count and the centroids (r16:
     // d23 passes the full corpus here while assigning the sample —

@@ -80,27 +80,14 @@ object Similarity {
     else df
   }
 
-  /** Per-cell occupancy target for [[autoCells]]. Fixed at 4096 in
-    * production — a session knob that silently changed cell counts
-    * would also change the mirrored oracle CTEs, so the parity harness
-    * could NOT catch the drift (ADVICE r13). The former
-    * `GRAFT_CELL_DIVISOR` env override is retired (VERDICT r14 #5):
-    * s11 exercises the two-level route unforced and SimilaritySpec
-    * forces branches through explicit `ncells`, so the only remaining
-    * escape hatch is the `graft.test.cellDivisor` SYSTEM property — a
-    * test-JVM flag no production launcher sets — and a non-default
-    * value is still loudly logged.
+  /** Per-cell occupancy target for [[autoCells]]. A constant: the
+    * oracle mirrors it in its CTEs (PipelineQueries), so a settable
+    * value would change cell counts on both sides at once and the
+    * parity harness could not catch the drift (ADVICE r13). s11
+    * exercises the two-level route unforced and SimilaritySpec forces
+    * branches through explicit `ncells`.
     */
-  private[graft] val cellDivisor: Long = {
-    val v = sys.props.get("graft.test.cellDivisor").map(_.toLong)
-    v.filter(_ != 4096L).foreach { d =>
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"graft.test.cellDivisor=$d overrides the 4096 IVF occupancy " +
-          "target — TEST-ONLY flag; cell counts (and the mirrored " +
-          "oracle CTEs) are non-standard for this JVM")
-    }
-    v.getOrElse(4096L)
-  }
+  private[graft] final val CellDivisor = 4096L
 
   /** Driver-side id-statistics cache for the IVF family, keyed by the
     * CANONICALIZED logical plan of the id projection: one
@@ -192,7 +179,7 @@ object Similarity {
     * on the pinned 8-cell structure the DuckDB oracles encode.
     */
   def autoCells(emb: DataFrame, idCol: String): Int =
-    math.max(8, (idStats(emb, idCol)._1 / cellDivisor).toInt)
+    math.max(8, (idStats(emb, idCol)._1 / CellDivisor).toInt)
 
   /** Cell-count gate above which [[assignCells]] routes through the
     * two-level coarse quantizer. At or below it the single-level
@@ -696,8 +683,8 @@ object Similarity {
     * exchange also removed the width it accidentally provided — at a
     * 13 MB sf1 corpus, under [[parallelized]]'s 16 MB byte floor, the
     * whole bucket + candidate join + cosine pipeline serialized on ONE
-    * scan split and s6 ran 1.6x SLOWER than the join arm, probed
-    * single-session in tools/SrpProbe). The former aggregate exchanged
+    * scan split and s6 ran 1.6x SLOWER than the join arm,
+    * OPTIMIZATION_r17.md). The former aggregate exchanged
     * the corpus unconditionally, so an explicit-width repartition can
     * never cost more than the old shape — and explicit widths are
     * exempt from AQE's byte-based coalescing, which cannot see

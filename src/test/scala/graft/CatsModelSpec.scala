@@ -84,18 +84,9 @@ class CatsModelSpec extends AnyFunSuite {
     assert(RefModels.cats.isDefined)
   }
 
-  test("the CatsKernel seam is live: a delegating kernel is invoked and bit-identical") {
+  test("the batched forward is bit-identical to the per-row forward") {
     assume(available)
-    var calls = 0L
-    val counting = new graft.models.CatsKernel {
-      def gemmAcc(x: Array[Array[Double]], w: Array[Array[Double]],
-          out: Array[Array[Double]]): Unit = {
-        calls += 1
-        graft.models.CatsKernel.Scalar.gemmAcc(x, w, out)
-      }
-    }
-    val base = CatsModel.load(kerasPath)
-    val seamed = CatsModel.load(kerasPath, counting)
+    val model = CatsModel.load(kerasPath)
     val lcg = new Lcg(99L)
     val bands = Array("u", "g", "r", "i", "z", "y")
     val xs = Array(5, 5, 12).map { seqLen =>
@@ -106,28 +97,16 @@ class CatsModelSpec extends AnyFunSuite {
       val band = Array.fill(seqLen)(bands(((lcg.next() + 1) * 3).toInt % 6))
       Rubin.catsInputTensor(mjd, flux, err, band)
     }
-    val got = seamed.forwardBatch(xs)
-    assert(calls > 0, "the injected kernel was never invoked — dead seam")
-    // bit-identical both to the default-kernel batch path and to the
-    // per-row forward (the contract CatsKernel documents)
-    val viaDefault = base.forwardBatch(xs)
-    val viaPerRow = xs.map(base.forward)
-    for (i <- xs.indices; c <- 0 until 5) {
-      assert(got(i)(c) == viaDefault(i)(c), s"row $i class $c vs default batch")
+    val got = model.forwardBatch(xs)
+    val viaPerRow = xs.map(model.forward)
+    for (i <- xs.indices; c <- 0 until 5)
       assert(got(i)(c) == viaPerRow(i)(c), s"row $i class $c vs per-row")
-    }
   }
 
-  test("vector kernel loads under test and is BIT-identical to scalar on fuzzed shapes") {
-    // Scalar is the measured default (GemmBench null result — see
-    // CatsKernel.default); the vector kernel must still LOAD here
-    // (build.sbt adds the incubator module to forked runs) so the
-    // opt-in path stays exercised, and must be raw-bits identical
-    assert(graft.models.CatsKernel.default eq graft.models.CatsKernel.Scalar,
-      "default drifted from the measured-scalar decision")
+  test("tiled GEMM is BIT-identical to a plain j-ascending loop on fuzzed shapes") {
     val lcg = new Lcg(7L)
-    // shapes straddling the lane width (SPECIES_PREFERRED is 2-8
-    // doubles): remainders, sub-lane rows, odd batch counts
+    // batch counts straddling the 4-row tile (remainder rows, sub-tile
+    // batches), odd inner and output widths
     for (trial <- 0 until 20) {
       val bN = 1 + (trial % 5)
       val nJ = 1 + ((trial * 7) % 9)
@@ -138,12 +117,13 @@ class CatsModelSpec extends AnyFunSuite {
       val w = mat(nJ, nK)
       val o1 = mat(bN, nK)
       val o2 = o1.map(_.clone())
-      graft.models.CatsKernel.Scalar.gemmAcc(x, w, o1)
-      graft.models.CatsVectorKernel.gemmAcc(x, w, o2)
+      CatsModel.gemmAcc(x, w, o1)
+      for (b <- 0 until bN; j <- 0 until nJ; k <- 0 until nK)
+        o2(b)(k) += x(b)(j) * w(j)(k)
       for (b <- 0 until bN; k <- 0 until nK)
         assert(java.lang.Double.doubleToRawLongBits(o1(b)(k)) ==
           java.lang.Double.doubleToRawLongBits(o2(b)(k)),
-          s"trial $trial out($b)($k): scalar ${o1(b)(k)} vs vector ${o2(b)(k)}")
+          s"trial $trial out($b)($k): tiled ${o1(b)(k)} vs plain ${o2(b)(k)}")
     }
   }
 }

@@ -115,6 +115,36 @@ class ClassifiersSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("kilonova scores gated alerts with its default components") {
+    import spark.implicits._
+    // two-band light curves spanning +-40 d around a mid-curve peak, so
+    // the PC interpolation reaches well past the grid's first samples
+    def alert(id: String, host: String, ndethist: Int) = {
+      val jd = (0 until 9).map(i => 2459000.0 + 10.0 * i)
+      val mag = jd.indices.map(i => 18.0 + 0.05 * (i - 4) * (i - 4))
+      (id, jd ++ jd, mag ++ mag.map(_ + 0.3), Seq.fill(18)(0.05),
+        Seq.fill(9)(1) ++ Seq.fill(9)(2), host, ndethist)
+    }
+    val df = Seq(alert("a", "Unknown", 5), alert("b", "galaxy", 12),
+        alert("c", "Star", 5))
+      .toDF("objectId", "cjd", "cmagpsf", "csigmapsf", "cfid", "cdsxmatch",
+        "ndethist")
+      .withColumn("candidate", struct(col("ndethist")))
+      .drop("ndethist")
+    val gate = SelectionCuts.kilonovaGate(col("cmagpsf"),
+      col("candidate.ndethist"), col("cdsxmatch"))
+    assert(df.filter(gate).count() === 2, "premise: two gated alerts")
+    val out = Classifiers.kilonova(spark, df)
+      .select("objectId", "pKNe", "pKNe_is_stub").collect()
+      .map(r => r.getString(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
+    for (id <- Seq("a", "b")) {
+      val p = out(id)._1
+      assert(p >= 0.0 && p <= 1.0, s"$id: pKNe $p")
+    }
+    assert(out("c")._1 === 0.0)
+    assert(out.values.forall(_._2 == graft.models.RefModels.kilonova.isEmpty))
+  }
+
   test("anomaly: min over valid bands, NaN when no valid band") {
     val withFeatures = AdFeatures(spark, enriched)
     val out = Classifiers.anomaly(spark, withFeatures)
