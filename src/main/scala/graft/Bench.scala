@@ -10,6 +10,10 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     // optional comma-separated subset for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // the sidecar is written only when the run completes: drop the last
+    // run's copy first, so a run that dies early leaves none behind
+    val sidecar = java.nio.file.Paths.get("bench_out.json")
+    java.nio.file.Files.deleteIfExists(sidecar)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -124,7 +128,7 @@ object Bench {
     // sidecar file AND re-print it after spark.stop() so it is the
     // final application output. Comparisons with old rounds stay valid
     // — same queries, same timing, same schema.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
+    try java.nio.file.Files.write(sidecar,
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable =>
       System.err.println(s"[bench] sidecar write failed: ${e.getMessage}") }

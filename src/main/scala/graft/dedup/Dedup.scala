@@ -200,9 +200,7 @@ object Dedup {
     }
     starts(ntoks) = bytes.length + 1
     val nsh = ntoks - n + 1
-    // open addressing, power-of-two capacity >= 2 * nsh
-    var cap = 4
-    while (cap < (nsh << 1)) cap <<= 1
+    val cap = shingleTableCapacity(nsh)
     val mask = cap - 1
     val slotHash = new Array[Long](cap)
     val slotIdx = new Array[Int](cap) // shingle index + 1; 0 = empty
@@ -241,6 +239,25 @@ object Dedup {
       else java.util.Arrays.copyOf(out, nout)
     java.util.Arrays.sort(res)
     res
+  }
+
+  /** Largest open-addressing table of [[hashedShinglesKernel]]: the
+    * largest power of two an `Int`-indexed array can hold.
+    */
+  private[graft] val MaxShingleTable = 1 << 30
+
+  /** Open-addressing capacity for `nsh` shingles: the smallest power of
+    * two >= max(4, 2 * nsh), counted in `Long` so a huge text fails
+    * with a message instead of wrapping `Int` and probing a full table
+    * forever.
+    */
+  private[graft] def shingleTableCapacity(nsh: Int): Int = {
+    val need = 2L * nsh
+    require(need <= MaxShingleTable,
+      s"text has $nsh shingles; the shingle table holds at most ${MaxShingleTable / 2}")
+    var cap = 4
+    while (cap < need) cap <<= 1
+    cap
   }
 
   /** Distinct hashed token n-gram shingles, ASCENDING-SORTED (compiled

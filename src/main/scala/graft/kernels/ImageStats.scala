@@ -16,39 +16,64 @@ object ImageStats {
   /** astropy sigma_clip(sigma, maxiters) with the defaults the reference
     * uses: center = median, spread = population std, iterate to
     * convergence; NaN pixels start masked.
+    *
+    * The unmasked pixels are kept twice: in row-major order, for the
+    * mean and std sums, and sorted once, for the median. A pass masks
+    * the values v with |v - median| > sigma * std; as v - median is
+    * monotone in v, they form the two ends of the sorted window, which
+    * shrinks to the survivors without another sort.
     */
   def sigmaClip(img: Array[Array[Double]], sigma: Double = 3.0,
       maxIters: Int = 10): Masked = {
     val rows = img.length
     val cols = if (rows == 0) 0 else img(0).length
     val mask = Array.tabulate(rows, cols)((r, c) => img(r)(c).isNaN)
+    // unmasked pixels in row-major order, with their pixel index
+    val vals = new Array[Double](rows * cols)
+    val at = new Array[Int](rows * cols)
+    var n = 0
+    var r = 0
+    while (r < rows) {
+      var c = 0
+      while (c < cols) {
+        if (!mask(r)(c)) { vals(n) = img(r)(c); at(n) = r * cols + c; n += 1 }
+        c += 1
+      }
+      r += 1
+    }
+    val sorted = java.util.Arrays.copyOf(vals, n)
+    java.util.Arrays.sort(sorted)
+    var lo = 0 // sorted(lo until hi) holds the n unmasked values
+    var hi = n
     var iter = 0
     var changed = true
     while (changed && iter < maxIters) {
-      val vals = for {
-        r <- 0 until rows; c <- 0 until cols if !mask(r)(c)
-      } yield img(r)(c)
-      if (vals.isEmpty) { changed = false }
+      if (n == 0) { changed = false }
       else {
-        val arr = vals.toArray
-        val med = LightCurveFeatures.medianOf(arr)
-        val mean = arr.sum / arr.length
+        val med = LightCurveFeatures.quantileSorted(sorted, lo, hi, 0.5)
+        // a left fold from the first element, as Array#sum reduces
+        var sum = vals(0)
+        var i = 1
+        while (i < n) { sum += vals(i); i += 1 }
+        val mean = sum / n
         var ss = 0.0
-        arr.foreach { v => val d = v - mean; ss += d * d }
-        val std = math.sqrt(ss / arr.length) // population std (numpy default)
+        i = 0
+        while (i < n) { val d = vals(i) - mean; ss += d * d; i += 1 }
+        val std = math.sqrt(ss / n) // population std (numpy default)
+        val bound = sigma * std
         changed = false
-        var r = 0
-        while (r < rows) {
-          var c = 0
-          while (c < cols) {
-            if (!mask(r)(c) && math.abs(img(r)(c) - med) > sigma * std) {
-              mask(r)(c) = true
-              changed = true
-            }
-            c += 1
-          }
-          r += 1
+        var kept = 0
+        i = 0
+        while (i < n) {
+          if (math.abs(vals(i) - med) > bound) {
+            mask(at(i) / cols)(at(i) % cols) = true
+            changed = true
+          } else { vals(kept) = vals(i); at(kept) = at(i); kept += 1 }
+          i += 1
         }
+        n = kept
+        while (lo < hi && math.abs(sorted(lo) - med) > bound) lo += 1
+        while (hi > lo && math.abs(sorted(hi - 1) - med) > bound) hi -= 1
       }
       iter += 1
     }

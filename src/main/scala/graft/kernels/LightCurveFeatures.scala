@@ -25,13 +25,17 @@ object LightCurveFeatures {
     "mean_variance", "anderson_darling_normal", "chi2", "skew", "stetson_K")
 
   /** numpy-style linear-interpolation quantile over a sorted array. */
-  def quantileSorted(sorted: Array[Double], q: Double): Double = {
-    if (sorted.isEmpty) return Double.NaN
-    val pos = (sorted.length - 1) * q
+  def quantileSorted(sorted: Array[Double], q: Double): Double =
+    quantileSorted(sorted, 0, sorted.length, q)
+
+  /** The quantile over the sorted slice `sorted(from until until)`. */
+  def quantileSorted(sorted: Array[Double], from: Int, until: Int, q: Double): Double = {
+    if (until <= from) return Double.NaN
+    val pos = (until - from - 1) * q
     val lo = math.floor(pos).toInt
     val hi = math.ceil(pos).toInt
-    if (lo == hi) sorted(lo)
-    else sorted(lo) + (pos - lo) * (sorted(hi) - sorted(lo))
+    if (lo == hi) sorted(from + lo)
+    else sorted(from + lo) + (pos - lo) * (sorted(from + hi) - sorted(from + lo))
   }
 
   def medianOf(values: Array[Double]): Double = {

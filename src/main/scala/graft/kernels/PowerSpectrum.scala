@@ -11,52 +11,104 @@ package graft.kernels
   */
 object PowerSpectrum {
 
-  /** Naive 2-D DFT squared amplitudes, row-major flattened. Sizes here
-    * are tiny (<= 63), so O(n^3) is fine and dependency-free.
+  /** cos/sin of `-2.0 * math.Pi * k * c / n` at `k * n + c`. */
+  private final class Twiddle(val cos: Array[Double], val sin: Array[Double])
+
+  private val twiddles = new java.util.concurrent.ConcurrentHashMap[Integer, Twiddle]
+
+  private def twiddle(n: Int): Twiddle = twiddles.computeIfAbsent(n, _ => {
+    val cos = new Array[Double](n * n)
+    val sin = new Array[Double](n * n)
+    var k = 0
+    while (k < n) {
+      var c = 0
+      while (c < n) {
+        val ang = -2.0 * math.Pi * k * c / n
+        cos(k * n + c) = math.cos(ang)
+        sin(k * n + c) = math.sin(ang)
+        c += 1
+      }
+      k += 1
+    }
+    new Twiddle(cos, sin)
+  })
+
+  /** 2-D DFT squared amplitudes, row-major flattened: a direct DFT over
+    * rows then columns, O(n^3) on the <= 63-pixel cutouts.
+    *
+    * Bit-identity contract: every angle is the expression
+    * `-2.0 * math.Pi * k * c / n` evaluated once into a per-size table,
+    * and every output sums its terms in ascending index order, so the
+    * result is bit-for-bit that of the per-term `math.cos`/`math.sin`
+    * loop (the JVM rounds each `*` and `+` separately and never
+    * contracts them to FMA). `HostlessKernelSpec` pins raw bits against
+    * that loop on odd, even and non-square sizes.
     */
   def powerSpectrum2d(img: Array[Array[Double]]): Array[Double] = {
     val n = img.length
     val m = img(0).length
+    val flat = new Array[Double](n * m)
+    var r = 0
+    while (r < n) { System.arraycopy(img(r), 0, flat, r * m, m); r += 1 }
+    val out = new Array[Double](n * m)
+    spectrum(flat, n, m, new Array[Double](n * m), new Array[Double](n * m), out)
+    out
+  }
+
+  /** [[powerSpectrum2d]] of the row-major `n` x `m` image `img` into
+    * `out`; `re`/`im` are `n * m` scratch.
+    */
+  private def spectrum(img: Array[Double], n: Int, m: Int, re: Array[Double],
+      im: Array[Double], out: Array[Double]): Unit = {
     // 1-D DFT along rows then columns
-    val re = Array.ofDim[Double](n, m)
-    val im = Array.ofDim[Double](n, m)
+    val tm = twiddle(m)
     var r = 0
     while (r < n) {
+      val row = r * m
       var k = 0
       while (k < m) {
         var sr = 0.0; var si = 0.0
+        val t = k * m
         var c = 0
         while (c < m) {
-          val ang = -2.0 * math.Pi * k * c / m
-          sr += img(r)(c) * math.cos(ang)
-          si += img(r)(c) * math.sin(ang)
+          sr += img(row + c) * tm.cos(t + c)
+          si += img(row + c) * tm.sin(t + c)
           c += 1
         }
-        re(r)(k) = sr; im(r)(k) = si
+        re(row + k) = sr; im(row + k) = si
         k += 1
       }
       r += 1
     }
-    val out = new Array[Double](n * m)
+    // column pass: out(k1, .) accumulates rr ascending for every k2 at
+    // once, the same per-element order as a dot product per (k1, k2)
+    val tn = twiddle(n)
+    val accR = new Array[Double](m)
+    val accI = new Array[Double](m)
     var k1 = 0
     while (k1 < n) {
+      java.util.Arrays.fill(accR, 0.0)
+      java.util.Arrays.fill(accI, 0.0)
+      var rr = 0
+      while (rr < n) {
+        val cr = tn.cos(k1 * n + rr)
+        val ci = tn.sin(k1 * n + rr)
+        val row = rr * m
+        var k2 = 0
+        while (k2 < m) {
+          accR(k2) += re(row + k2) * cr - im(row + k2) * ci
+          accI(k2) += re(row + k2) * ci + im(row + k2) * cr
+          k2 += 1
+        }
+        rr += 1
+      }
       var k2 = 0
       while (k2 < m) {
-        var sr = 0.0; var si = 0.0
-        var rr = 0
-        while (rr < n) {
-          val ang = -2.0 * math.Pi * k1 * rr / n
-          val (cr, ci) = (math.cos(ang), math.sin(ang))
-          sr += re(rr)(k2) * cr - im(rr)(k2) * ci
-          si += re(rr)(k2) * ci + im(rr)(k2) * cr
-          rr += 1
-        }
-        out(k1 * m + k2) = sr * sr + si * si
+        out(k1 * m + k2) = accR(k2) * accR(k2) + accI(k2) * accI(k2)
         k2 += 1
       }
       k1 += 1
     }
-    out
   }
 
   /** (knrm, kbins, binAreas) for a square size (powerspectrum.py:88-100). */
@@ -88,48 +140,86 @@ object PowerSpectrum {
   def radialSpectrum(img: Array[Array[Double]], knrm: Array[Double],
       kbins: Array[Double], areas: Array[Double]): Array[Double] = {
     val amps = powerSpectrum2d(img)
-    val nb = areas.length
-    val sums = new Array[Double](nb)
-    val counts = new Array[Int](nb)
+    val out = new Array[Double](areas.length)
+    binnedMean(amps, binsOf(amps.length, knrm, kbins, areas.length), areas,
+      new Array[Double](areas.length), out)
+    out
+  }
+
+  /** Bin of each of the first `len` frequencies, -1 outside the bins. */
+  private def binsOf(len: Int, knrm: Array[Double], kbins: Array[Double],
+      nb: Int): Array[Int] = {
+    val bins = new Array[Int](len)
     var i = 0
-    while (i < amps.length) {
+    while (i < len) {
       val k = knrm(i)
-      if (k >= kbins(0) && k <= kbins(nb)) {
-        var b = ((k - kbins(0)) / (kbins(1) - kbins(0))).toInt
-        if (b == nb) b = nb - 1
-        sums(b) += amps(i)
-        counts(b) += 1
-      }
+      bins(i) =
+        if (k >= kbins(0) && k <= kbins(nb)) {
+          val b = ((k - kbins(0)) / (kbins(1) - kbins(0))).toInt
+          if (b == nb) nb - 1 else b
+        } else -1
       i += 1
     }
-    Array.tabulate(nb)(b =>
-      if (counts(b) == 0) Double.NaN else sums(b) / counts(b) * areas(b))
+    bins
+  }
+
+  private def binnedMean(amps: Array[Double], bins: Array[Int],
+      areas: Array[Double], sums: Array[Double], out: Array[Double]): Unit = {
+    val nb = areas.length
+    val counts = new Array[Int](nb)
+    java.util.Arrays.fill(sums, 0.0)
+    var i = 0
+    while (i < amps.length) {
+      val b = bins(i)
+      if (b >= 0) { sums(b) += amps(i); counts(b) += 1 }
+      i += 1
+    }
+    var b = 0
+    while (b < nb) {
+      out(b) = if (counts(b) == 0) Double.NaN else sums(b) / counts(b) * areas(b)
+      b += 1
+    }
   }
 
   /** 1-D Wasserstein distance between equal-weight samples. */
   def wasserstein(u0: Array[Double], v0: Array[Double]): Double = {
     val u = u0.clone(); java.util.Arrays.sort(u)
     val v = v0.clone(); java.util.Arrays.sort(v)
-    val all = (u ++ v).sorted
+    wassersteinSorted(u, v)
+  }
+
+  /** [[wasserstein]] of two samples already in `java.util.Arrays.sort`
+    * order. Walks the merged order (what sorting `u ++ v` yields) and
+    * integrates |U(x) - V(x)| between consecutive points, where U(x)
+    * counts the `u` elements `<= x`: a prefix of `u` that only grows as
+    * x does, so a cursor replaces the binary search. At a NaN point
+    * nothing is `<= x` and both counts are 0, as a binary search finds.
+    */
+  private def wassersteinSorted(u: Array[Double], v: Array[Double]): Double = {
+    val nu = u.length; val nv = v.length
+    var a = 0; var b = 0 // merge cursors: the next unmerged element
+    var cu = 0; var cv = 0 // elements <= x
+    var x = 0.0
     var d = 0.0
     var i = 0
-    while (i < all.length - 1) {
-      val x = all(i)
-      val ucdf = countLE(u, x).toDouble / u.length
-      val vcdf = countLE(v, x).toDouble / v.length
-      d += math.abs(ucdf - vcdf) * (all(i + 1) - x)
+    while (i < nu + nv) {
+      val next =
+        if (b == nv || (a < nu && java.lang.Double.compare(u(a), v(b)) <= 0)) {
+          a += 1; u(a - 1)
+        } else { b += 1; v(b - 1) }
+      if (i > 0) {
+        if (!x.isNaN) {
+          while (cu < nu && u(cu) <= x) cu += 1
+          while (cv < nv && v(cv) <= x) cv += 1
+        }
+        val ucdf = (if (x.isNaN) 0 else cu).toDouble / nu
+        val vcdf = (if (x.isNaN) 0 else cv).toDouble / nv
+        d += math.abs(ucdf - vcdf) * (next - x)
+      }
+      x = next
       i += 1
     }
     d
-  }
-
-  private def countLE(sorted: Array[Double], x: Double): Int = {
-    var lo = 0; var hi = sorted.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (sorted(mid) <= x) lo = mid + 1 else hi = mid
-    }
-    lo
   }
 
   /** Two-sample KS statistic + asymptotic p-value. */
@@ -162,23 +252,48 @@ object PowerSpectrum {
   /** Host statistic for one image: KS(WD(real, shuffled), WD(shuffled,
     * shuffled)) (powerspectrum.py:120-233). Returns (-1,-1) when the
     * distance distributions are degenerate (the reference's guard).
+    *
+    * Each iteration Fisher-Yates shuffles the row-major pixels with
+    * `rng.nextInt(i + 1)` from the last index down, then takes the
+    * centred `cutoutSize` square of the shuffled `full` x `full` image
+    * (`full` = row count). Every spectrum is sorted once; the distances
+    * merge-walk the sorted pairs.
     */
   def hostStatistic(image: Array[Array[Double]], cutoutSize: Int,
       iterations: Int, rng: java.util.Random): (Double, Double) = {
     val full = image.length
+    require(cutoutSize <= full, s"cutout $cutoutSize exceeds the $full-row image")
     val start = (full - cutoutSize) / 2
-    val stop = start + cutoutSize
-    def cutout(img: Array[Array[Double]]): Array[Array[Double]] =
-      img.slice(start, stop).map(_.slice(start, stop))
-
-    val (knrm, kbins, areas) = prepare(cutoutSize)
-    val real = radialSpectrum(cutout(image), knrm, kbins, areas)
-
+    val cs = cutoutSize
     val flat = image.flatten
-    val shuffled = Array.ofDim[Double](iterations, areas.length)
+    require(flat.length >= full * full, s"image is narrower than its $full rows")
+
+    val (knrm, kbins, areas) = prepare(cs)
+    val nb = areas.length
+    val bins = binsOf(cs * cs, knrm, kbins, nb)
+    val cut = new Array[Double](cs * cs)
+    val re = new Array[Double](cs * cs)
+    val im = new Array[Double](cs * cs)
+    val amps = new Array[Double](cs * cs)
+    val sums = new Array[Double](nb)
+    def radial(out: Array[Double]): Array[Double] = {
+      spectrum(cut, cs, cs, re, im, amps)
+      binnedMean(amps, bins, areas, sums, out)
+      java.util.Arrays.sort(out)
+      out
+    }
+
+    var r = 0
+    while (r < cs) {
+      System.arraycopy(image(start + r), start, cut, r * cs, cs); r += 1
+    }
+    val real = radial(new Array[Double](nb))
+
+    val copy = new Array[Double](flat.length)
+    val shuffled = new Array[Array[Double]](iterations)
     var it = 0
     while (it < iterations) {
-      val copy = flat.clone()
+      System.arraycopy(flat, 0, copy, 0, flat.length)
       // Fisher-Yates
       var i = copy.length - 1
       while (i > 0) {
@@ -186,19 +301,50 @@ object PowerSpectrum {
         val t = copy(i); copy(i) = copy(j); copy(j) = t
         i -= 1
       }
-      val img2 = Array.tabulate(full, full)((r, c) => copy(r * full + c))
-      shuffled(it) = radialSpectrum(cutout(img2), knrm, kbins, areas)
+      r = 0
+      while (r < cs) {
+        System.arraycopy(copy, (start + r) * full + start, cut, r * cs, cs); r += 1
+      }
+      shuffled(it) = radial(new Array[Double](nb))
       it += 1
     }
 
-    val realToShuffled = shuffled.map(s => wasserstein(s, real))
-    val pairs = for {
-      i <- 0 until iterations; j <- (i + 1) until iterations
-    } yield wasserstein(shuffled(i), shuffled(j))
-    val s2s = pairs.toArray
+    val realToShuffled = new Array[Double](iterations)
+    it = 0
+    while (it < iterations) {
+      realToShuffled(it) = wassersteinSorted(shuffled(it), real); it += 1
+    }
+    val s2s = new Array[Double](iterations * (iterations - 1) / 2)
+    var p = 0
+    var i = 0
+    while (i < iterations) {
+      var j = i + 1
+      while (j < iterations) {
+        s2s(p) = wassersteinSorted(shuffled(i), shuffled(j)); p += 1; j += 1
+      }
+      i += 1
+    }
 
-    if (realToShuffled.distinct.length < 3 || s2s.distinct.length < 3)
-      (-1.0, -1.0)
+    if (!threeDistinct(realToShuffled) || !threeDistinct(s2s)) (-1.0, -1.0)
     else ksTest(realToShuffled, s2s)
+  }
+
+  /** Whether `xs` holds at least 3 values distinct under `Double.equals`
+    * (bit patterns, NaNs collapsed) — `xs.distinct.length >= 3`.
+    */
+  private def threeDistinct(xs: Array[Double]): Boolean = {
+    var first = 0L; var second = 0L
+    var seen = 0
+    var i = 0
+    while (i < xs.length) {
+      val bits = java.lang.Double.doubleToLongBits(xs(i))
+      if (seen == 0) { first = bits; seen = 1 }
+      else if (bits != first) {
+        if (seen == 1) { second = bits; seen = 2 }
+        else if (bits != second) return true
+      }
+      i += 1
+    }
+    false
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.kernels.{Fits, ImageStats, PowerSpectrum}
+import graft.kernels.{Fits, ImageStats, PowerSpectrum, UnsharedRandom}
 
 /** Hostless-transient detection over the FITS cutout stamps — reference:
   * ztf/hostless_detection/{processor,run_pipeline,pipeline_utils,
@@ -44,7 +44,7 @@ object HostlessDetection {
     if (!ImageStats.hostlessCandidate(sClip, tClip, cropRadius = CropRadius,
       maxClip = MaxClip, minClip = MinClip)) return (-99f, -99f)
 
-    val rng = new java.util.Random(seed)
+    val rng = new UnsharedRandom(seed)
     val sFilled = ImageStats.noiseFill(nanToZero(s.data), sClip.mask, rng)
     val tFilled = ImageStats.noiseFill(nanToZero(t.data), tClip.mask, rng)
     val (sStat, _) = PowerSpectrum.hostStatistic(sFilled, CropRadius * 2, iterations, rng)

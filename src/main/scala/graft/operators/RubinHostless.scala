@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.kernels.{Fits, ImageStats, PowerSpectrum}
+import graft.kernels.{Fits, ImageStats, PowerSpectrum, UnsharedRandom}
 
 /** Rubin/LSST hostless detection — reference:
   * rubin/hostless_detection/{processor,run_pipeline,pipeline_utils}.py.
@@ -49,7 +49,7 @@ object RubinHostless {
     }
     if (!candidate) return (-99f, -99f)
 
-    val rng = new java.util.Random(seed)
+    val rng = new UnsharedRandom(seed)
     val sFilled = ImageStats.noiseFill(nanToZero(s), sClip.mask, rng)
     val tFilled = ImageStats.noiseFill(nanToZero(t), tClip.mask, rng)
     val cut = math.min(2 * CropRadius, sFilled.length)

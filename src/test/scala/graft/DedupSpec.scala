@@ -49,6 +49,18 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("shingle table capacity: powers of two >= 2 * shingles, a clean failure past 2^29") {
+    assert(Seq(1, 2, 3, 5, 1000).map(Dedup.shingleTableCapacity) === Seq(4, 4, 8, 16, 2048))
+    assert(Dedup.shingleTableCapacity(1 << 29) === Dedup.MaxShingleTable)
+    assert(Dedup.shingleTableCapacity((1 << 29) - 1) === Dedup.MaxShingleTable)
+    // 2 * nsh wraps Int from 2^30 shingles on, and the old Int doubling
+    // never reached it from 2^29 + 1 on: both looped forever
+    for (nsh <- Seq((1 << 29) + 1, 1 << 30, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](Dedup.shingleTableCapacity(nsh))
+      assert(e.getMessage.contains(s"$nsh shingles"))
+    }
+  }
+
   test("simhash assignment is sound against the exact pair enumeration") {
     import org.apache.spark.sql.functions.col
     val docs = Tables.t(spark, sf, "documents")
